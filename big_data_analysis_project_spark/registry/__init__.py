@@ -16,6 +16,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 
 from ._base import KEY_ARTIFACTS, ScaleRefusal
+from ._memo import ARTIFACTS, blocked_seconds
 from . import (
     analytic_q,
     dedup_q,
@@ -82,31 +83,14 @@ for _k in _FB:
         assert _chain not in _seen, f"fallback cycle through {_k}"
         _seen.add(_chain)
 
-# Build-order dependencies BETWEEN shared artifacts (VERDICT r9 #6):
-# a key declaring `artifacts={"ngram_pairs"}` at its @q registration
-# transitively consumes shingle_evidence and shingles too — the
-# closure lives HERE, next to warm_shared_artifacts' build order, so
-# each registration only declares what its code directly touches.
+# Build-order dependencies BETWEEN the warmable shared artifacts — a
+# view of the ``parents`` each ``@artifact`` declaration names (see
+# _memo), so a key declaring `artifacts={"ngram_pairs"}` at its @q
+# registration transitively consumes shingle_evidence and shingles too
+# and each registration only declares what its code directly touches.
+# The profile and pre-flight memos stay out: no key declares them.
 ARTIFACT_PARENTS: dict[str, frozenset[str]] = {
-    "shingle_evidence": frozenset({"shingles"}),
-    "capped_evidence": frozenset({"shingles"}),
-    "ngram_pairs": frozenset({"shingle_evidence", "shingles"}),
-    "minhash_pairs": frozenset({"shingles"}),
-    # the MLlib interop key's TF features + fitted MinHashLSH model
-    # (r14); its warm builder also reads the shared df profile to
-    # refuse where the key would
-    "mllib_model": frozenset({"shingles"}),
-    "ivf_model": frozenset({"unit_vectors"}),
-    # the memoized 1-row query probe reads the checkpointed unit frame
-    "query_vec": frozenset({"unit_vectors"}),
-    # batch_model delegates to the shared fixed-k model at driver
-    # scales, so it transitively needs both
-    "batch_model": frozenset({"unit_vectors", "ivf_model"}),
-    # the residual PQ variant trains on assign_cells residuals
-    "pq_codebooks": frozenset({"unit_vectors", "ivf_model"}),
-    # the kNN probe-budget pre-flight samples the unit frame and
-    # ranks cells of the batch quantizer
-    "knn_probe": frozenset({"unit_vectors", "ivf_model", "batch_model"}),
+    a.name: a.parents for a in ARTIFACTS.values() if a.warm and a.parents
 }
 
 
@@ -198,26 +182,42 @@ def warm_shared_artifacts(
     spark: SparkSession,
     sf_dir: str,
     skip: frozenset[str] = frozenset(),
-    parallel: int | None = None,
+    sequential: bool = False,
 ) -> dict[str, float]:
-    """Pre-materialize every session-memoized corpus-snapshot artifact
-    and return per-artifact build seconds (VERDICT r5 #2: the bench
-    previously charged each artifact to whichever key touched it
-    first, so per-key deltas across rounds were attribution shifts,
-    not plan changes). Each builder is an eager localCheckpoint (or a
-    driver-side model fit), so timing the cached accessor times the
-    real build; a second call is a cache hit and costs ~nothing.
+    """Pre-materialize every warmable shared artifact (each
+    ``@artifact(..., warm=...)`` declaration) and return per-artifact
+    build seconds (VERDICT r5 #2: the bench previously charged each
+    artifact to whichever key touched it first, so per-key deltas
+    across rounds were attribution shifts, not plan changes). Each
+    build is an eager localCheckpoint or a driver-side model fit, so
+    timing the warm action times the real build; a second call is a
+    memo hit and costs ~nothing.
 
-    Order matters only for attribution *within* this dict: evidence
-    consumes shingles, the IVF model consumes unit vectors, so each
-    entry's time is the marginal cost given its predecessors.
+    Every warm action runs on its own thread (guide §2.6: actions are
+    only sequential because the driver calls them sequentially), so
+    the independent chains (shingles -> evidence/minhash -> ngram;
+    unit_vectors -> ivf -> pq/batch -> knn_probe; the standalone
+    models and marts) overlap and the phase wall drops to roughly its
+    critical path. No scheduler orders them: a child's accessor calls
+    its parent's, which is a memo hit, a wait on the parent's running
+    build (single flight), or the build itself, so nothing builds
+    twice. Per-entry seconds exclude the time a thread spent blocked
+    on another thread's build, but concurrent builds still contend, so
+    callers must report the phase wall, not the sum. ``sequential``
+    runs the actions one by one in declaration order (parents first),
+    where each entry's seconds are its MARGINAL cost given its
+    predecessors — tools/scale_probe.py's attribution mode.
 
     An artifact whose build REFUSES (its own probe-and-refuse guard —
     e.g. shingle_evidence at sf3skew) is recorded under
     ``"<name>!refused"`` instead of ``"<name>"`` (ADVICE r10: a bench
     `shared` map must be able to tell a warmed artifact from a refused
-    one); values stay floats so ``sum(shared.values())`` keeps
-    counting the real probe time spent reaching the refusal.
+    one), and so is every artifact built from it; values stay floats
+    so ``sum(shared.values())`` keeps counting the real probe time
+    spent reaching the refusal. A refusal never strands the rest of
+    the phase (round 10): independent artifacts still warm, instead of
+    being silently first-touch-charged to whichever key hits them
+    first. Any other error is raised once every action has finished.
 
     ``skip``: artifact names to leave cold — for probes whose key list
     does not consume them. Exists because the UNCAPPED exact-evidence
@@ -226,181 +226,33 @@ def warm_shared_artifacts(
     it needs ~1.45e9 join rows and a ~64 g heap, and a probe of the
     CAPPED tiers must not pay (or die on) a bill none of its keys
     incur. bench.py never passes skip — the full registry consumes
-    everything.
-
-    ``parallel``: max builders in flight (default
-    ``$SPARK_GRAFT_WARM_PARALLEL`` or 6). The builders form two
-    independent chains (shingles -> evidence/minhash -> ngram;
-    unit_vectors -> ivf -> pq/batch -> knn_probe) plus the standalone
-    tb_marts, so independent builds overlap (guide §2.6: actions are
-    only sequential because the driver calls them sequentially) and
-    the phase wall drops to roughly its critical path. Dependency
-    order within a chain is enforced from ``ARTIFACT_PARENTS`` — the
-    same closure the bench and scale probes already consume — so a
-    child never races its parent's memoized build. ``parallel=1``
-    keeps the exact sequential behavior, where each entry's seconds
-    are its MARGINAL cost given its predecessors (scale-probe
-    attribution mode); in parallel mode per-entry seconds are
-    contended wall times that can overlap, so callers must report the
-    phase wall, not the sum."""
-    import time
-
-    builders = [
-        ("shingles", lambda: dedup_q.shingles_cached(spark, sf_dir).count()),
-        (
-            "shingle_evidence",
-            lambda: dedup_q.shingle_evidence_cached(spark, sf_dir).count(),
-        ),
-        # the df-capped bounded-tier evidence (optimization r13):
-        # shared by all three dfcap keys; unlike shingle_evidence it
-        # never refuses — the cap bounds its join by construction
-        (
-            "capped_evidence",
-            lambda: dedup_q.capped_evidence_cached(spark, sf_dir).count(),
-        ),
-        (
-            "minhash_pairs",
-            lambda: dedup_q.minhash_pairs_cached(spark, sf_dir).count(),
-        ),
-        # the hamming-verified simhash edge list (optimization r13):
-        # the fingerprint/band index a pipeline maintains per snapshot,
-        # exactly like minhash_pairs above — without warming, the
-        # two-level banding build re-ran on every dedup_simhash call
-        (
-            "simhash_pairs",
-            lambda: dedup_q.simhash_pairs_cached(spark, sf_dir).count(),
-        ),
-        # the MLlib interop features+model (optimization r14): the
-        # pca_model discipline — deterministic per snapshot, linear to
-        # build, re-paid per call (and per routed-facade call) without
-        # this; the builder refuses exactly where the key would
-        (
-            "mllib_model",
-            lambda: dedup_q.warm_mllib_model(spark, sf_dir),
-        ),
-        ("ngram_pairs", lambda: dedup_q.ngram_pairs_cached(spark, sf_dir).count()),
-        (
-            "unit_vectors",
-            lambda: similarity_q.unit_vectors_cached(spark, sf_dir).count(),
-        ),
-        ("ivf_model", lambda: similarity_q.ivf_centroids_cached(spark, sf_dir)),
-        # the single-query ANN keys' memoized 1-row probe (r14) — a
-        # sub-0.2 s build, warmed so min-of-runs never hides it
-        ("query_vec", lambda: similarity_q.query_unit_cached(spark, sf_dir)),
-        # ADVICE r6 #1: PQ codebooks (plain + residual) and the batch
-        # quantizer are memoized exactly like the IVF model — without
-        # warming them here their training hides in run 0 of the
-        # min-of-runs protocol and appears in NO reported number
-        (
-            "pq_codebooks",
-            lambda: similarity_q.warm_pq_codebooks(spark, sf_dir),
-        ),
-        (
-            "batch_model",
-            lambda: similarity_q.batch_centroids_cached(spark, sf_dir),
-        ),
-        # the kNN probe-budget pre-flight (VERDICT r9 #1): index-build
-        # state exactly like the model — a no-op at fixed-k scales
-        # (returns the KNN_PROBE default), one exact-sample corpus
-        # scan in the grown-k regime, memoized per snapshot
-        (
-            "knn_probe",
-            lambda: similarity_q.knn_probe_cached(spark, sf_dir),
-        ),
-        # the fitted PCA basis (optimization r13): model-sized like the
-        # IVF/PQ models above; without warming, embed_pca re-paid the
-        # fit's two corpus passes on every call
-        (
-            "pca_model",
-            lambda: training_q.pca_model_cached(spark, sf_dir),
-        ),
-        ("tb_marts", lambda: pipeline_q.synthetic_marts(spark)),
-    ]
-    import os
+    everything."""
     import sys
-
-    # default 6 (r14): with the mllib_model builder, shingles has FIVE
-    # children competing for slots — at 4 one child of the hot chain
-    # always queues behind the others (interleaved A/B, fresh sessions:
-    # with-mllib wall 23.5/29.7 s at 4 vs 19.4/23.3 s at 6; the
-    # without-mllib baseline is 19.4/19.9 s). 4 vs 6 vs 8 was a wash
-    # before the 15th builder existed (the r14 change-10 A/B).
-    if parallel is None:
-        try:
-            parallel = int(os.environ.get("SPARK_GRAFT_WARM_PARALLEL", "6"))
-        except ValueError:
-            parallel = 6
-    parallel = max(1, min(parallel, 8))
+    import time
+    from concurrent.futures import ThreadPoolExecutor
 
     out: dict[str, float] = {}
 
-    def run_one(name: str, build) -> None:
-        """Build one artifact, recording seconds (or '<name>!refused').
-
-        A refusing artifact must not strand the REST of the warm
-        phase (round 10): at sf3skew shingle_evidence refuses at
-        its 6.9e8 pairs_bound, and aborting used to leave the
-        INDEPENDENT artifacts (minhash_pairs, unit_vectors, the
-        models) cold — silently first-touch-charged to whichever key
-        hit them first, exactly the attribution bug this phase exists
-        to prevent. The probe time spent reaching the refusal is real
-        work and stays recorded: a refused warm is NOT a warmed
-        artifact (ADVICE r10), so it lands under a self-describing
-        '<name>!refused' key (float value — sum() stays safe)."""
-        t0 = time.perf_counter()
+    def run_one(art) -> None:
+        name, t0, blocked = art.name, time.perf_counter(), blocked_seconds()
         spark.sparkContext.setJobDescription(f"warm_shared_artifacts: {name}")
         try:
-            build()
+            art.warm_up(spark, sf_dir)
         except ScaleRefusal as exc:
             print(f"[warm] {name} refused: {exc}", file=sys.stderr)
-            out[f"{name}!refused"] = round(time.perf_counter() - t0, 3)
-            return
+            name += "!refused"
         finally:
             spark.sparkContext.setJobDescription(None)
-        out[name] = round(time.perf_counter() - t0, 3)
+        busy = time.perf_counter() - t0 - (blocked_seconds() - blocked)
+        out[name] = round(busy, 3)
 
-    active = [(n, b) for n, b in builders if n not in skip]
-    if parallel == 1:
-        for name, build in active:
-            run_one(name, build)
+    active = [a for a in ARTIFACTS.values() if a.warm and a.name not in skip]
+    if sequential:
+        for art in active:
+            run_one(art)
         return out
-
-    from concurrent.futures import FIRST_COMPLETED, ThreadPoolExecutor
-    from concurrent.futures import wait as futures_wait
-
-    present = {n for n, _ in active}
-    pending = [n for n, _ in active]  # declared order = submit preference
-    fns = dict(active)
-    done: set[str] = set()
-    first_error: BaseException | None = None
-    with ThreadPoolExecutor(max_workers=parallel) as pool:
-        inflight: dict = {}
-        while pending or inflight:
-            if first_error is None:
-                # a skipped parent never blocks (the child's accessor
-                # builds it inline, exactly as in the sequential path)
-                ready = [
-                    n
-                    for n in pending
-                    if (ARTIFACT_PARENTS.get(n, frozenset()) & present) <= done
-                ]
-                for n in ready:
-                    pending.remove(n)
-                    inflight[pool.submit(run_one, n, fns[n])] = n
-            if not inflight:
-                break  # hard error drained, or nothing runnable
-            finished, _ = futures_wait(
-                set(inflight), return_when=FIRST_COMPLETED
-            )
-            for fut in finished:
-                n = inflight.pop(fut)
-                exc = fut.exception()
-                if exc is not None and first_error is None:
-                    first_error = exc
-                # errored/refused names still count as done for
-                # scheduling: dependents run and re-raise/refuse
-                # themselves, matching the sequential semantics
-                done.add(n)
-    if first_error is not None:
-        raise first_error
+    with ThreadPoolExecutor(max_workers=max(1, len(active))) as pool:
+        futures = [pool.submit(run_one, art) for art in active]
+    for fut in futures:
+        fut.result()  # the first hard error, after every action finished
     return out

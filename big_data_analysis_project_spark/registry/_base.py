@@ -54,9 +54,7 @@ def local_values_df(spark, rows, cols_ddl: str):
     return spark.sql(f"SELECT * FROM VALUES {body} AS t({names})")
 
 # key -> frozenset of session-memoized shared-artifact names the key's
-# query lazily consumes (the names warm_shared_artifacts builds:
-# shingles, shingle_evidence, minhash_pairs, ngram_pairs, unit_vectors,
-# ivf_model, pq_codebooks, batch_model, knn_probe, tb_marts).
+# query lazily consumes (the warmable ``@artifact`` names, _memo.py).
 # Declared AT REGISTRATION via ``@q(key, artifacts={...})`` so the
 # dependency lives next to the code that creates it — VERDICT r9 #6:
 # tools/scale_probe.py previously hand-maintained a parallel copy of

@@ -1241,8 +1241,8 @@ def count_triangles_capped(e: DataFrame, cap: int) -> DataFrame:
     eager checkpoint runs a Spark job when the DataFrame is BUILT, so
     even explain-only/schema-introspection callers pay one bounded
     adjacency materialization per construction — the same accepted
-    trade as ``_pagerank_over``; memoize per (edge-artifact, cap) via
-    snapshot_memo if that ever becomes a problem."""
+    trade as ``_pagerank_over``; declare it an ``@artifact`` keyed on
+    (edge-artifact, cap) if that ever becomes a problem."""
     adj = capped_adjacency(degree_oriented_edges(e), cap).localCheckpoint(
         eager=True
     )

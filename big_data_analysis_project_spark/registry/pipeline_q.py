@@ -16,7 +16,7 @@ from pyspark.sql import functions as F
 
 from ..plans.tb_pipeline import run_tb_pipeline, summarize
 from ..sources.synthetic import _BASE_RATES, _POPULATIONS
-from ._memo import session_memo
+from ._memo import artifact
 from .relational import _SYN_DIM
 
 from ._base import make_registry
@@ -113,9 +113,7 @@ def synthetic_tb_inputs(spark: SparkSession) -> tuple[DataFrame, DataFrame]:
     return tb_raw, pop_raw
 
 
-_MARTS_CACHE: dict = {}
-
-
+@artifact("tb_marts", warm=True, snapshot=False)
 def synthetic_marts(spark: SparkSession):
     """The four TB marts over the synthetic inputs, memoized per
     SparkSession. Nine registry keys (tb_pipeline + the serve_* family)
@@ -126,20 +124,17 @@ def synthetic_marts(spark: SparkSession):
     localCheckpoint-ed: the data is mart-scale tiny (60 rows) and
     checkpointing cuts the pivot's value-discovery job from every
     downstream query plan."""
-    def build():
-        tb_raw, pop_raw = synthetic_tb_inputs(spark)
-        marts = run_tb_pipeline(tb_raw, pop_raw, reference_parity=True, repair_swap=False)
-        # checkpoint the shared FINAL table once (one pipeline
-        # execution), then re-derive the three marts from the
-        # checkpointed frame — checkpointing each mart separately would
-        # run the pivot/join pipeline three times
-        marts.final = marts.final.localCheckpoint(eager=True)
-        marts.country_summary, marts.yearly_trends, marts.country_trends = summarize(
-            marts.final
-        )
-        return marts
-
-    return session_memo(_MARTS_CACHE, spark, None, build)
+    tb_raw, pop_raw = synthetic_tb_inputs(spark)
+    marts = run_tb_pipeline(tb_raw, pop_raw, reference_parity=True, repair_swap=False)
+    # checkpoint the shared FINAL table once (one pipeline
+    # execution), then re-derive the three marts from the
+    # checkpointed frame — checkpointing each mart separately would
+    # run the pivot/join pipeline three times
+    marts.final = marts.final.localCheckpoint(eager=True)
+    marts.country_summary, marts.yearly_trends, marts.country_trends = summarize(
+        marts.final
+    )
+    return marts
 
 
 @q("tb_pipeline", ORACLE_TB_PIPELINE, artifacts={"tb_marts"})

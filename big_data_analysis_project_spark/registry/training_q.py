@@ -23,7 +23,7 @@ from pyspark.sql.window import Window
 from ..sources.readers import load_table
 
 from ._base import make_registry
-from ._memo import register_cache, snapshot_memo
+from ._memo import artifact
 
 QUERIES, ORACLE, q = make_registry()
 
@@ -511,9 +511,7 @@ def _fit_pca(spark: SparkSession, sf_dir: str):
     return mu, comps, evals[order]
 
 
-_PCA_CACHE: dict = register_cache({})
-
-
+@artifact("pca_model", warm=True)
 def pca_model_cached(spark: SparkSession, sf_dir: str):
     """``_fit_pca`` memoized per (session, snapshot) — the fitted
     (mu, comps, evals) is a model-sized corpus-snapshot artifact
@@ -522,7 +520,7 @@ def pca_model_cached(spark: SparkSession, sf_dir: str):
     reason: the fit's two corpus passes (gram partials + per-dim sums)
     were re-paid on EVERY ``embed_pca`` call, while a real deployment
     fits once per snapshot and projects many times."""
-    return snapshot_memo(_PCA_CACHE, spark, sf_dir, lambda: _fit_pca(spark, sf_dir))
+    return _fit_pca(spark, sf_dir)
 
 
 @q("embed_pca", artifacts={"pca_model"})  # no SQL oracle for eigh; pytest

@@ -10,12 +10,16 @@ warned about. This test makes under-declaration a suite failure: it
 AST-derives, for each registered key, the cached-artifact accessors
 actually reachable from the key's function (transitively through
 module-level helpers), and asserts the declared closure covers the
-derived closure. No Spark session needed — pure source analysis."""
+derived closure, and that each ``@artifact``'s declared parents cover
+the accessors its own build reaches. No Spark session needed — pure
+source analysis (except the warm-phase test at the end)."""
 
 from __future__ import annotations
 
 import ast
 from pathlib import Path
+
+from big_data_analysis_project_spark.registry import ARTIFACTS
 
 REG_DIR = (
     Path(__file__).resolve().parents[1]
@@ -24,23 +28,23 @@ REG_DIR = (
 )
 
 # accessor function -> warmable artifact name (the names
-# warm_shared_artifacts builds)
-ACCESSORS = {
-    "shingles_cached": "shingles",
-    "shingle_evidence_cached": "shingle_evidence",
-    "capped_evidence_cached": "capped_evidence",
-    "minhash_pairs_cached": "minhash_pairs",
-    "simhash_pairs_cached": "simhash_pairs",
-    "mllib_model_cached": "mllib_model",
-    "ngram_pairs_cached": "ngram_pairs",
-    "unit_vectors_cached": "unit_vectors",
-    "query_unit_cached": "query_vec",
-    "ivf_centroids_cached": "ivf_model",
-    "pq_codebooks_cached": "pq_codebooks",
-    "batch_centroids_cached": "batch_model",
-    "knn_probe_cached": "knn_probe",
-    "pca_model_cached": "pca_model",
-    "synthetic_marts": "tb_marts",
+# warm_shared_artifacts builds), from the @artifact records; the
+# profile and pre-flight memos are followed as helpers instead
+ACCESSORS = {a.accessor.__name__: a.name for a in ARTIFACTS.values() if a.warm}
+
+# the hand-written ARTIFACT_PARENTS literal the @artifact declarations
+# replaced, pinned as the reference graph
+REFERENCE_PARENTS = {
+    "shingle_evidence": frozenset({"shingles"}),
+    "capped_evidence": frozenset({"shingles"}),
+    "ngram_pairs": frozenset({"shingle_evidence", "shingles"}),
+    "minhash_pairs": frozenset({"shingles"}),
+    "mllib_model": frozenset({"shingles"}),
+    "ivf_model": frozenset({"unit_vectors"}),
+    "query_vec": frozenset({"unit_vectors"}),
+    "batch_model": frozenset({"unit_vectors", "ivf_model"}),
+    "pq_codebooks": frozenset({"unit_vectors", "ivf_model"}),
+    "knn_probe": frozenset({"unit_vectors", "ivf_model", "batch_model"}),
 }
 
 
@@ -56,11 +60,9 @@ def _closure(arts, parents):
     return out
 
 
-def _derive_key_artifacts():
-    """key -> set of accessor-artifacts reachable from its function,
-    following helper calls by name across registry modules (names are
-    module-unique; an accessor call terminates recursion — its own
-    deps are the parent closure's job)."""
+def _call_graph():
+    """(function name -> names it calls, key -> its function name)
+    over every registry module."""
     fn_calls: dict[str, set[str]] = {}
     key_fn: dict[str, str] = {}
     for mod in REG_DIR.glob("*.py"):
@@ -87,20 +89,30 @@ def _derive_key_artifacts():
                     and isinstance(dec.args[0], ast.Constant)
                 ):
                     key_fn[dec.args[0].value] = node.name
+    return fn_calls, key_fn
 
-    def reachable(fname: str, seen: set[str]) -> set[str]:
-        if fname in seen:
-            return set()
-        seen.add(fname)
-        out: set[str] = set()
-        for c in fn_calls.get(fname, ()):
-            if c in ACCESSORS:
-                out.add(ACCESSORS[c])
-            elif c in fn_calls and c != fname:
-                out |= reachable(c, seen)
-        return out
 
-    return {k: reachable(f, set()) for k, f in key_fn.items()}
+def _reachable(fn_calls, fname: str, seen: set[str]) -> set[str]:
+    """Accessor-artifacts reachable from ``fname``'s body, following
+    helper calls by name across registry modules (names are
+    module-unique; an accessor call terminates recursion — its own
+    deps are the parent closure's job)."""
+    if fname in seen:
+        return set()
+    seen.add(fname)
+    out: set[str] = set()
+    for c in fn_calls.get(fname, ()):
+        if c in ACCESSORS:
+            out.add(ACCESSORS[c])
+        elif c in fn_calls and c != fname:
+            out |= _reachable(fn_calls, c, seen)
+    return out
+
+
+def _derive_key_artifacts():
+    """key -> set of accessor-artifacts reachable from its function."""
+    fn_calls, key_fn = _call_graph()
+    return {k: _reachable(fn_calls, f, set()) for k, f in key_fn.items()}
 
 
 def test_declared_artifacts_cover_actual_consumption():
@@ -146,6 +158,34 @@ def test_declared_artifacts_are_known_names():
         assert set(parents) <= known, (art, parents)
 
 
+def test_artifact_parents_equal_reference_graph():
+    """The declared parents reproduce the hand-kept graph they replaced."""
+    from big_data_analysis_project_spark.registry import ARTIFACT_PARENTS
+
+    assert ARTIFACT_PARENTS == REFERENCE_PARENTS
+
+
+def test_artifact_parents_cover_build_consumption():
+    """Each artifact's declared parents (closed transitively) must
+    cover the warmable accessors its build and its warm action reach —
+    an undeclared parent would let a --skip-warm probe trigger the
+    skipped build, and would put the artifact ahead of its parent in
+    the sequential warm order."""
+    fn_calls, _ = _call_graph()
+    parents = {a.name: a.parents for a in ARTIFACTS.values()}
+    missing = {}
+    for art in ARTIFACTS.values():
+        fns = [art.accessor.__name__]
+        if callable(art.warm):
+            fns.append(art.warm.__name__)
+        reached = set().union(*(_reachable(fn_calls, f, set()) for f in fns))
+        reached.discard(art.name)
+        have = _closure(art.parents, parents)
+        if not reached <= have:
+            missing[art.name] = sorted(reached - have)
+    assert not missing, f"under-declared @artifact parents: {missing}"
+
+
 def test_closure_is_transitive():
     from big_data_analysis_project_spark.registry import key_artifact_deps
 
@@ -156,79 +196,63 @@ def test_closure_is_transitive():
     assert key_artifact_deps("dedup_exact") == frozenset()
 
 
-def test_warm_scheduler_respects_parents_and_overlaps(spark, monkeypatch):
-    """r13 optimization (guide §2.6): warm_shared_artifacts runs
-    independent builder chains concurrently but must never start a
-    child before its ARTIFACT_PARENTS finish — a child racing its
-    parent's memoized build would double-build the checkpoint. Fakes
-    with deliberate sleeps record (start, end) per builder; the
-    parallel run must (a) order every present (child, parent) edge and
-    (b) actually overlap (wall well under the serial sum)."""
+def test_warm_scheduler_respects_parents_and_overlaps(
+    spark, tmp_path, monkeypatch
+):
+    """warm_shared_artifacts runs every registered warm action on its
+    own thread with no scheduler: a child's build reaches its parent's
+    accessor and waits on the parent's running build. Each artifact's
+    build is stubbed (calls its parents' accessors, sleeps, records its
+    span); the parallel run must build every artifact once, start each
+    child after its parents end, overlap the independent chains, and
+    report per-artifact seconds without the time spent blocked on
+    another thread's build. ``sequential`` runs declaration order."""
     import time
-    import types
 
     import big_data_analysis_project_spark.registry as R
 
     spans: dict[str, tuple[float, float]] = {}
 
-    def fake(name, dt=0.15):
-        def _f(*a, **k):
+    def fake(art):
+        def build(spark, *args):
+            for parent in art.parents:
+                ARTIFACTS[parent].accessor(spark, args[0])
             t0 = time.perf_counter()
-            time.sleep(dt)
-            spans[name] = (t0, time.perf_counter())
-            return types.SimpleNamespace(count=lambda: 0)
+            time.sleep(0.3)
+            assert art.name not in spans, f"{art.name} built twice"
+            spans[art.name] = (t0, time.perf_counter())
+            return art.name
 
-        return _f
+        return build
 
-    monkeypatch.setattr(R.dedup_q, "shingles_cached", fake("shingles"))
-    monkeypatch.setattr(
-        R.dedup_q, "shingle_evidence_cached", fake("shingle_evidence")
-    )
-    monkeypatch.setattr(
-        R.dedup_q, "capped_evidence_cached", fake("capped_evidence")
-    )
-    monkeypatch.setattr(R.dedup_q, "minhash_pairs_cached", fake("minhash_pairs"))
-    monkeypatch.setattr(R.dedup_q, "simhash_pairs_cached", fake("simhash_pairs"))
-    monkeypatch.setattr(R.dedup_q, "warm_mllib_model", fake("mllib_model"))
-    monkeypatch.setattr(R.dedup_q, "ngram_pairs_cached", fake("ngram_pairs"))
-    monkeypatch.setattr(
-        R.similarity_q, "unit_vectors_cached", fake("unit_vectors")
-    )
-    monkeypatch.setattr(R.similarity_q, "ivf_centroids_cached", fake("ivf_model"))
-    monkeypatch.setattr(R.similarity_q, "query_unit_cached", fake("query_vec"))
-    monkeypatch.setattr(R.similarity_q, "warm_pq_codebooks", fake("pq_codebooks"))
-    monkeypatch.setattr(
-        R.similarity_q, "batch_centroids_cached", fake("batch_model")
-    )
-    monkeypatch.setattr(R.similarity_q, "knn_probe_cached", fake("knn_probe"))
-    monkeypatch.setattr(R.training_q, "pca_model_cached", fake("pca_model"))
-    monkeypatch.setattr(R.pipeline_q, "synthetic_marts", fake("tb_marts"))
+    warmable = [a for a in ARTIFACTS.values() if a.warm]
+    for art in warmable:
+        monkeypatch.setattr(art, "build", fake(art))
+        monkeypatch.setattr(art, "warm", True)
+    # the TB marts are application-scoped: stubbing them would leave the
+    # stub in the session's memo, so this run leaves them cold
+    skip = frozenset({"tb_marts"})
+    names = [a.name for a in warmable if a.name not in skip]
+    assert len(names) == 14
 
     t0 = time.perf_counter()
-    out = R.warm_shared_artifacts(spark, "/nonexistent", parallel=4)
+    out = R.warm_shared_artifacts(spark, str(tmp_path / "par"), skip=skip)
     wall = time.perf_counter() - t0
 
-    assert set(spans) == set(out) == {
-        "shingles", "shingle_evidence", "capped_evidence", "minhash_pairs",
-        "simhash_pairs", "mllib_model", "ngram_pairs", "unit_vectors",
-        "ivf_model", "query_vec", "pq_codebooks", "batch_model",
-        "knn_probe", "pca_model", "tb_marts",
-    }
-    for child, parents in R.ARTIFACT_PARENTS.items():
-        for parent in parents:
+    assert set(spans) == set(out) == set(names)
+    for child in names:
+        for parent in ARTIFACTS[child].parents:
             assert spans[child][0] >= spans[parent][1], (
                 f"{child} started before parent {parent} finished"
             )
     serial = sum(e - s for s, e in spans.values())
     assert wall < 0.8 * serial, (wall, serial)
+    # blocked time is not charged: each build is counted once, by the
+    # thread that ran it, where charging the waits would count every
+    # thread up to the end of its own artifact's build
+    charged_waits = sum(spans[n][1] - t0 for n in names)
+    assert sum(out.values()) < (serial + charged_waits) / 2, (out, serial)
 
-    # parallel=1 is the sequential attribution mode: declared order
     spans.clear()
-    R.warm_shared_artifacts(spark, "/nonexistent", parallel=1)
-    starts = sorted(spans, key=lambda n: spans[n][0])
-    assert starts == [
-        "shingles", "shingle_evidence", "capped_evidence", "minhash_pairs",
-        "simhash_pairs", "mllib_model", "ngram_pairs", "unit_vectors",
-        "ivf_model", "query_vec", "pq_codebooks", "batch_model",
-        "knn_probe", "pca_model", "tb_marts",
-    ]
+    R.warm_shared_artifacts(spark, str(tmp_path / "seq"), skip=skip, sequential=True)
+    assert sorted(spans, key=lambda n: spans[n][0]) == names

@@ -938,3 +938,23 @@ def test_udaf_momentum_kernel_edge_semantics(spark, tmp_path):
     want = sorted(tuple(r) for r in conn.execute(ORACLE["udaf_momentum"]).fetchall())
     assert got == want
     assert got == [(1, 3, 1), (2, 3, 1), (3, 1, 0), (4, 3, 0)]
+
+
+@pytest.mark.parametrize("probe", ["query_unit_cached", "ann_mllib_lsh"])
+def test_missing_query_vector_is_a_clear_error(spark, tmp_path, probe):
+    """An embeddings table without the query row (vec_id ==
+    QUERY_VEC_ID) raises a ValueError naming the id and the corpus,
+    not a bare IndexError from ``.collect()[0]`` — both through the
+    memoized query probe the single-query ANN keys share and through
+    the MLlib LSH key's own probe."""
+    from big_data_analysis_project_spark.registry import similarity_q as S
+
+    spark.createDataFrame(
+        [(S.QUERY_VEC_ID + i, [1.0, float(i), 0.5, 2.0], 0) for i in (1, 2, 3)],
+        "vec_id long, embedding array<float>, label int",
+    ).write.mode("overwrite").parquet(str(tmp_path / "embeddings.parquet"))
+    sf = str(tmp_path)
+    call = S.query_unit_cached if probe == "query_unit_cached" else QUERIES[probe]
+    with pytest.raises(ValueError, match=rf"QUERY_VEC_ID \({S.QUERY_VEC_ID}\)") as exc:
+        call(spark, sf)
+    assert sf in str(exc.value)

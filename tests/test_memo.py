@@ -1,18 +1,24 @@
-"""snapshot_memo contract (ADVICE r5 #4): rewriting the parquet files
-under a memoized sf_dir within one Spark application must invalidate
-the cached artifact instead of serving the stale one."""
+"""The ``@artifact`` memo contract: one store keyed on the Spark
+application, the snapshot fingerprint of ``sf_dir`` (ADVICE r5 #4:
+rewriting the parquet files under a memoized sf_dir within one
+application must invalidate the artifact instead of serving the stale
+one) and ``extra``; single-flight builds; ``release_snapshot``."""
 
 from __future__ import annotations
 
+import inspect
+import threading
 import time
 
+import pytest
+
+from big_data_analysis_project_spark.registry._base import ScaleRefusal
 from big_data_analysis_project_spark.registry._memo import (
-    _REGISTERED_CACHES,
-    register_cache,
+    ARTIFACTS,
+    _STORE,
+    artifact,
     release_snapshot,
-    session_memo,
     snapshot_fingerprint,
-    snapshot_memo,
 )
 
 
@@ -20,102 +26,268 @@ def _write_parquet(spark, path, n):
     spark.range(n).write.mode("overwrite").parquet(str(path / "t.parquet"))
 
 
-def test_snapshot_memo_invalidates_on_rewrite(spark, tmp_path):
+@pytest.fixture
+def declare():
+    """``artifact`` for test-local declarations, withdrawn (record and
+    memoized values) when the test ends so the registry's own set of
+    artifacts is unchanged."""
+    names = []
+
+    def _declare(name, **kw):
+        names.append(f"test_memo.{name}")
+        return artifact(names[-1], **kw)
+
+    yield _declare
+    for name in names:
+        ARTIFACTS.pop(name).clear()
+
+
+def _entries(name):
+    return [k for k in _STORE if k[0] == f"test_memo.{name}"]
+
+
+def test_snapshot_memo_invalidates_on_rewrite(spark, tmp_path, declare):
     _write_parquet(spark, tmp_path, 5)
-    cache: dict = {}
     builds = []
 
-    def build():
+    @declare("rewrite")
+    def build(spark, sf_dir):
         builds.append(1)
         return len(builds)
 
-    assert snapshot_memo(cache, spark, str(tmp_path), build) == 1
-    assert snapshot_memo(cache, spark, str(tmp_path), build) == 1  # cache hit
+    assert build(spark, str(tmp_path)) == 1
+    assert build(spark, str(tmp_path)) == 1  # memo hit
     time.sleep(0.01)  # ensure mtime_ns moves even on coarse filesystems
     _write_parquet(spark, tmp_path, 7)
-    assert snapshot_memo(cache, spark, str(tmp_path), build) == 2  # rebuilt
+    assert build(spark, str(tmp_path)) == 2  # rebuilt
     # stale-fingerprint entry evicted, not accumulated
-    assert len([k for k in cache if k[1][0] == str(tmp_path)]) == 1
+    assert len(_entries("rewrite")) == 1
 
 
-def test_snapshot_memo_extra_key_separates_models(spark, tmp_path):
+def test_snapshot_memo_extra_key_separates_models(spark, tmp_path, declare):
+    """``extra`` is read per call, so a moved dial keys a second model;
+    the accessor's arguments after sf_dir key it too."""
     _write_parquet(spark, tmp_path, 3)
-    cache: dict = {}
-    a = snapshot_memo(cache, spark, str(tmp_path), lambda: "a", extra=(1,))
-    b = snapshot_memo(cache, spark, str(tmp_path), lambda: "b", extra=(2,))
-    assert (a, b) == ("a", "b")
-    assert len(cache) == 2
+    dial = [1]
+
+    @declare("extra", extra=lambda: (dial[0],))
+    def model(spark, sf_dir, variant):
+        return (dial[0], variant)
+
+    assert model(spark, str(tmp_path), "a") == (1, "a")
+    dial[0] = 2
+    assert model(spark, str(tmp_path), "a") == (2, "a")
+    assert model(spark, str(tmp_path), "b") == (2, "b")
+    assert len(_entries("extra")) == 3
 
 
-def test_release_snapshot_drops_only_that_corpus(spark, tmp_path):
+def test_release_snapshot_drops_only_that_corpus(spark, tmp_path, declare):
     """The multi-corpus probe fix (round 13): release_snapshot must
-    sweep snapshot-keyed entries for exactly the released sf_dir from
-    every REGISTERED cache, leave other corpora and non-snapshot
-    session_memo entries alone, and report the drop count."""
+    drop the entries of exactly the released sf_dir, leave other
+    corpora and application-scoped artifacts alone, and report the
+    drop count."""
     dir_a, dir_b = tmp_path / "a", tmp_path / "b"
     dir_a.mkdir(), dir_b.mkdir()
     _write_parquet(spark, dir_a, 3)
     _write_parquet(spark, dir_b, 4)
-    cache: dict = register_cache({})
-    try:
-        snapshot_memo(cache, spark, str(dir_a), lambda: "A")
-        snapshot_memo(cache, spark, str(dir_b), lambda: "B")
-        session_memo(cache, spark, None, lambda: "session-scoped")
-        assert len(cache) == 3
-        assert release_snapshot(str(dir_a)) == 1
-        # dir_b and the non-snapshot entry survive; a re-ask for dir_a
-        # rebuilds instead of serving the dropped artifact
-        assert len(cache) == 2
-        rebuilt = []
-        snapshot_memo(
-            cache, spark, str(dir_a), lambda: rebuilt.append(1) or "A2"
-        )
-        assert rebuilt == [1]
-        # releasing a corpus nothing was built from is a no-op
-        assert release_snapshot(str(tmp_path / "nowhere")) == 0
-    finally:
-        _REGISTERED_CACHES.remove(cache)
+    rebuilt = []
+
+    @declare("per_corpus")
+    def per_corpus(spark, sf_dir):
+        rebuilt.append(sf_dir)
+        return sf_dir
+
+    @declare("per_app", snapshot=False)
+    def per_app(spark):
+        return "session-scoped"
+
+    per_corpus(spark, str(dir_a))
+    per_corpus(spark, str(dir_b))
+    per_app(spark)
+    assert release_snapshot(str(dir_a)) == 1
+    # dir_b and the application-scoped entry survive; a re-ask for
+    # dir_a rebuilds instead of serving the dropped artifact
+    assert len(_entries("per_corpus")) == 1 and len(_entries("per_app")) == 1
+    per_corpus(spark, str(dir_a))
+    assert rebuilt == [str(dir_a), str(dir_b), str(dir_a)]
+    # releasing a corpus nothing was built from is a no-op
+    assert release_snapshot(str(tmp_path / "nowhere")) == 0
 
 
-def test_registry_caches_are_registered():
-    """Every snapshot-keyed module-level memo dict must be swept by
-    release_snapshot — a cache added without register_cache would
-    silently reintroduce the cross-corpus pinning the probe fix
-    closed. The synthetic-marts cache is deliberately NOT snapshot
-    keyed (corpus-independent input) and is exempt."""
-    from big_data_analysis_project_spark.registry import (
-        dedup_q,
-        similarity_q,
-        streaming_q,
-    )
+def test_registry_caches_are_registered(spark, tmp_path, monkeypatch):
+    """release_snapshot sweeps every snapshot-scoped registry artifact
+    — the 17 former module-level caches, with the shared centroid
+    cache split into ivf_model and batch_model. Each build is stubbed,
+    so this needs no corpus."""
+    import big_data_analysis_project_spark.registry  # noqa: F401 (declares)
 
-    for mod, name in [
-        (dedup_q, "_SHINGLES_CACHE"),
-        (dedup_q, "_EVIDENCE_CACHE"),
-        (dedup_q, "_DF_PROFILE_CACHE"),
-        (dedup_q, "_MINHASH_CACHE"),
-        (dedup_q, "_PAIRS_CACHE"),
-        (dedup_q, "_INC_PROFILE_CACHE"),
-        (similarity_q, "_UNIT_CACHE"),
-        (similarity_q, "_CENTROID_CACHE"),
-        (similarity_q, "_PQ_CODEBOOK_CACHE"),
-        (similarity_q, "_KNN_PROBE_CACHE"),
-        (streaming_q, "_STREAM_PAIR_PROFILE_CACHE"),
-    ]:
-        assert any(
-            getattr(mod, name) is c for c in _REGISTERED_CACHES
-        ), f"{mod.__name__}.{name} is not registered for release_snapshot"
+    scoped = [a for a in ARTIFACTS.values() if a.snapshot]
+    assert len(scoped) == 18, [a.name for a in scoped]
+    sf = str(tmp_path)
+    for art in scoped:
+        key_args = [None] * (len(inspect.signature(art.build).parameters) - 2)
+        monkeypatch.setattr(art, "build", lambda *a, name=art.name: name)
+        assert art.accessor(spark, sf, *key_args) == art.name
+    assert release_snapshot(sf) == len(scoped)
+    assert not [k for k in _STORE if k[2] == sf]
 
 
 def test_snapshot_fingerprint_missing_dir():
     assert snapshot_fingerprint("/nonexistent/path/xyz") == ("<missing>",)
 
 
-def test_session_memo_still_keyed_per_application(spark):
-    cache: dict = {}
-    assert session_memo(cache, spark, "k", lambda: 42) == 42
+def test_session_memo_still_keyed_per_application(spark, declare):
+    """Application-scoped artifacts (the TB marts) key on the
+    application id alone."""
+
+    @declare("app_scoped", snapshot=False)
+    def marts(spark):
+        return 42
+
+    assert marts(spark) == 42
     app = spark.sparkContext.applicationId
-    assert (app, "k") in cache
+    assert [k[1:3] for k in _entries("app_scoped")] == [(app, None)]
+
+
+# --- single-flight builds ----------------------------------------------
+
+
+def _in_threads(fn, n):
+    """Run ``fn(i)`` on ``n`` threads released together; return the
+    results (or raised exceptions) in thread order."""
+    gate = threading.Barrier(n)
+    out = [None] * n
+
+    def run(i):
+        gate.wait(timeout=30)
+        try:
+            out[i] = fn(i)
+        except Exception as exc:  # noqa: BLE001 — recorded per thread
+            out[i] = exc
+
+    threads = [threading.Thread(target=run, args=(i,)) for i in range(n)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=60)
+    assert not any(t.is_alive() for t in threads)
+    return out
+
+
+def test_concurrent_callers_build_once(spark, tmp_path, declare):
+    """More callers than cores, switching threads as often as the
+    interpreter allows: every key is built exactly once, and every
+    caller of a key gets the same object."""
+    import sys
+
+    builds = []
+
+    @declare("single_flight")
+    def slow(spark, sf_dir, i):
+        builds.append(i)
+        time.sleep(0.05)
+        return object()
+
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        got = _in_threads(lambda i: slow(spark, str(tmp_path), i % 4), 32)
+    finally:
+        sys.setswitchinterval(switch)
+    assert sorted(builds) == [0, 1, 2, 3]
+    for i, g in enumerate(got):
+        assert g is got[i % 4]
+
+
+def test_failed_build_reaches_every_waiter_and_is_not_memoized(
+    spark, tmp_path, declare
+):
+    calls = []
+
+    @declare("refusing")
+    def refusing(spark, sf_dir):
+        calls.append(1)
+        time.sleep(0.2)
+        if len(calls) == 1:
+            raise ScaleRefusal("over budget", key="refusing", measured=2, budget=1)
+        return "built"
+
+    got = _in_threads(lambda i: refusing(spark, str(tmp_path)), 6)
+    assert len(calls) == 1
+    assert all(isinstance(g, ScaleRefusal) for g in got), got
+    assert not _entries("refusing")
+    # not memoized: the next call builds again (and now succeeds)
+    assert refusing(spark, str(tmp_path)) == "built"
+    assert len(calls) == 2
+
+
+def test_child_waits_on_parent_in_flight(spark, tmp_path, declare):
+    """A child whose parent is being built on another thread waits for
+    that build instead of starting a second one."""
+    sf = str(tmp_path)
+    parent_builds = []
+    started = threading.Event()
+
+    @declare("parent")
+    def parent(spark, sf_dir):
+        parent_builds.append(1)
+        started.set()
+        time.sleep(0.3)
+        return "p"
+
+    @declare("child", parents={"test_memo.parent"})
+    def child(spark, sf_dir):
+        return parent(spark, sf_dir) + "c"
+
+    t = threading.Thread(target=parent, args=(spark, sf))
+    t.start()
+    started.wait()
+    assert child(spark, sf) == "pc"
+    t.join()
+    assert parent_builds == [1]
+
+
+def test_independent_chains_overlap(spark, tmp_path, declare):
+    """Two independent parent->child chains built from four threads:
+    each artifact builds once, and the wall stays well under the
+    serial sum."""
+    sf = str(tmp_path)
+    spans = {}
+
+    def timed(name, dt, dep=None):
+        @declare(name, parents={f"test_memo.{dep}"} if dep else ())
+        def build(spark, sf_dir):
+            if dep:
+                accessors[dep](spark, sf_dir)
+            t0 = time.perf_counter()
+            time.sleep(dt)
+            assert name not in spans, f"{name} built twice"
+            spans[name] = (t0, time.perf_counter())
+            return name
+
+        return build
+
+    chains = (("a", None), ("a_child", "a"), ("b", None), ("b_child", "b"))
+    accessors = {name: timed(name, 0.25, dep) for name, dep in chains}
+    t0 = time.perf_counter()
+    got = _in_threads(lambda i: accessors[chains[i][0]](spark, sf), 4)
+    wall = time.perf_counter() - t0
+    assert got == [name for name, _ in chains]
+    assert set(spans) == set(accessors)
+    assert spans["a_child"][0] >= spans["a"][1]
+    assert spans["b_child"][0] >= spans["b"][1]
+    serial = sum(e - s for s, e in spans.values())
+    assert wall < 0.8 * serial, (wall, serial)
+
+
+def test_build_requiring_itself_raises(spark, tmp_path, declare):
+    @declare("loop")
+    def loop(spark, sf_dir):
+        return loop(spark, sf_dir)
+
+    with pytest.raises(RuntimeError, match="requires itself"):
+        loop(spark, str(tmp_path))
+    assert not _entries("loop")
 
 
 # --- bench.py bucket accounting (VERDICT r10 #2) -----------------------

@@ -14,7 +14,7 @@ from __future__ import annotations
 
 import pytest
 
-from big_data_analysis_project_spark.registry import QUERIES
+from big_data_analysis_project_spark.registry import ARTIFACTS, QUERIES
 
 from .conftest import SF_CORRECT, SF_SMOKE
 
@@ -1055,7 +1055,7 @@ def test_knn_mid_scale_upgrade_ships_exact_when_affordable(
     monkeypatch.delenv(S.KNN_STRICT_ENV, raising=False)
     monkeypatch.delenv("SPARK_GRAFT_KNN_PROBE", raising=False)
     monkeypatch.delenv("SPARK_GRAFT_KNN_EXACT_CAP", raising=False)
-    S._KNN_PROBE_CACHE.clear()
+    ARTIFACTS["knn_probe"].clear()
 
     decision = S.knn_ship_decision(spark, sf)
     assert decision["mode"] == "preflight" and decision["strict"] is False
@@ -1125,7 +1125,7 @@ def test_knn_strict_env_wires_min_recall_and_provenance(
     )
     monkeypatch.setattr(S, "unit_vectors_cached", lambda *_: None)
     monkeypatch.delenv("SPARK_GRAFT_KNN_PROBE", raising=False)
-    S._KNN_PROBE_CACHE.clear()
+    ARTIFACTS["knn_probe"].clear()
 
     monkeypatch.setenv(S.KNN_STRICT_ENV, "1")
     rec = S.knn_probe_provenance(spark, "/root/testdata/sf0.001")
@@ -1143,4 +1143,4 @@ def test_knn_strict_env_wires_min_recall_and_provenance(
     rec_lax = S.knn_probe_provenance(spark, "/root/testdata/sf0.001")
     assert seen == [S.KNN_TARGET_RECALL, None]  # new memo key, lax arg
     assert rec_lax["strict"] is False
-    S._KNN_PROBE_CACHE.clear()
+    ARTIFACTS["knn_probe"].clear()

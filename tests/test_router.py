@@ -10,7 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from big_data_analysis_project_spark.errors import NoBoundedTier, ScaleRefusal
-from big_data_analysis_project_spark.registry import QUERIES
+from big_data_analysis_project_spark.registry import ARTIFACTS, QUERIES
 from big_data_analysis_project_spark.registry._base import KEY_FALLBACKS
 from big_data_analysis_project_spark.router import RouteResult, route_plan, run_routed
 
@@ -306,7 +306,7 @@ def test_every_guarded_key_refuses_eagerly_at_invocation(
     monkeypatch.setattr(SIM, "BATCH_CELL_TARGET", 1)
     monkeypatch.setattr(SIM, "KNN_PROBE", 1)
     monkeypatch.setattr(SIM, "KNN_PROBE_MAX", 1)
-    SIM._KNN_PROBE_CACHE.clear()
+    ARTIFACTS["knn_probe"].clear()
     for env in (
         "SPARK_GRAFT_EVIDENCE_PAIRS_CAP",
         "SPARK_GRAFT_EMB_PAIRS_CAP",
@@ -346,7 +346,7 @@ def test_stream_join_guard_routes_to_batch_twin(spark, tmp_path, monkeypatch):
     sf = str(tmp_path)
     monkeypatch.setattr(S, "STREAM_PAIRS_BUDGET", 1)
     monkeypatch.delenv("SPARK_GRAFT_STREAM_PAIRS_CAP", raising=False)
-    S._STREAM_PAIR_PROFILE_CACHE.clear()
+    ARTIFACTS["stream_pair_profile"].clear()
 
     r = run_routed(spark, sf, "stream_pair_join")
     assert r.rerouted and r.key == "events_attribution"

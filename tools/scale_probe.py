@@ -217,12 +217,12 @@ def main() -> None:
                   file=sys.stderr)
         spark.read.parquet(str(Path(sf_dir) / "lineitem.parquet")).count()  # warm
         t0 = time.perf_counter()
-        # parallel=1: a probe's per-artifact seconds feed the α tables
+        # sequential: a probe's per-artifact seconds feed the α tables
         # in BENCH_SCALE.md as MARGINAL build costs given predecessors;
         # the bench's concurrent warm (guide §2.6) would turn them into
         # contended overlapped times and break that attribution
         shared = warm_shared_artifacts(
-            spark, sf_dir, skip=frozenset(skip_set), parallel=1
+            spark, sf_dir, skip=frozenset(skip_set), sequential=True
         )
         shared["_total_first_build"] = round(time.perf_counter() - t0, 3)
         result["shared"][tag] = shared
