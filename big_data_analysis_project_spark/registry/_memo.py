@@ -47,6 +47,8 @@ from collections.abc import Callable
 from concurrent.futures import Future
 from pathlib import Path
 
+from ..metadata import table_files
+
 # guards the store's bookkeeping only; builds run outside it
 _LOCK = threading.Lock()
 # (name, app, sf_dir, fingerprint, extra, args) -> Future of the value
@@ -194,18 +196,11 @@ def release_snapshot(sf_dir: str) -> int:
 
 def snapshot_fingerprint(sf_dir: str) -> tuple:
     """Cheap content fingerprint of a corpus snapshot directory:
-    sorted (relative name, size, mtime_ns) of every parquet file under
-    it — a pure-metadata stat walk, no data read. Folding this into a
-    memo key means a REWRITE of the parquet tables within one Spark
-    application invalidates the cached checkpoint/model instead of
-    silently serving the stale artifact (ADVICE r5 #4)."""
-    root = Path(sf_dir)
-    if not root.exists():
+    (path, size, mtime_ns) of every parquet file under it, from one
+    metadata listing, no data read. Folding this into a memo key means
+    a REWRITE of the parquet tables within one Spark application
+    invalidates the cached checkpoint/model instead of silently
+    serving the stale artifact (ADVICE r5 #4)."""
+    if not Path(sf_dir).exists():
         return ("<missing>",)
-    return tuple(
-        sorted(
-            (str(p.relative_to(root)), p.stat().st_size, p.stat().st_mtime_ns)
-            for p in root.rglob("*.parquet")
-            if p.is_file()
-        )
-    )
+    return tuple(table_files(sf_dir))

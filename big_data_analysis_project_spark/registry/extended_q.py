@@ -21,6 +21,7 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..metadata import column_bounds
 from ..sources.readers import load_events, load_table
 from .dedup_q import _NGRAM_ORACLE as _NGRAM_PAIR_SQL
 
@@ -1678,53 +1679,6 @@ def variant_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _parquet_int_bounds(
-    sf_dir: str, table: str, cols: tuple[str, ...]
-) -> dict[str, tuple[int, int]] | None:
-    """Exact per-column (min, max) for integer columns read from the
-    parquet FOOTER statistics — a pure-metadata pass over row-group
-    headers, no data read (optimization r14, guide §6: "reuse table
-    statistics instead of the extra pass"; footer min/max is exactly
-    what catalog stats are derived from). Integer parquet statistics
-    are exact (no string truncation), so the bounds equal what the
-    MIN/MAX scalar aggregation they replace would compute. Returns
-    None — caller falls back to the aggregation — when any row group
-    lacks stats for any requested column or the footer is unreadable."""
-    import pyarrow.parquet as pq
-
-    src = Path(sf_dir) / f"{table}.parquet"
-    files = (
-        sorted(p for p in src.rglob("*.parquet") if p.is_file())
-        if src.is_dir()
-        else [src]
-    )
-    if not files:
-        return None
-    lo: dict[str, int] = {}
-    hi: dict[str, int] = {}
-    try:
-        for f in files:
-            md = pq.ParquetFile(f).metadata
-            names = {
-                md.row_group(0).column(i).path_in_schema: i
-                for i in range(md.num_columns)
-            } if md.num_row_groups else {}
-            if not set(cols) <= set(names):
-                return None
-            for rg in range(md.num_row_groups):
-                for c in cols:
-                    st = md.row_group(rg).column(names[c]).statistics
-                    if st is None or not st.has_min_max:
-                        return None
-                    lo[c] = min(lo.get(c, st.min), st.min)
-                    hi[c] = max(hi.get(c, st.max), st.max)
-    except Exception:  # noqa: BLE001 — stats are an optimization, never fatal
-        return None
-    if set(lo) != set(cols):
-        return None
-    return {c: (int(lo[c]), int(hi[c])) for c in cols}
-
-
 @q(
     "sink_zorder",
     """SELECT l_orderkey, l_partkey, l_suppkey,
@@ -1743,35 +1697,31 @@ def sink_zorder(spark: SparkSession, sf_dir: str) -> DataFrame:
     only its sort key and leaves the second column's ranges spanning
     every file. Two-column pruning is footer-verified in
     tests/test_sinks.py. The bucket bounds come from the parquet
-    FOOTER statistics (optimization r14, guide §6) — the same exact
-    min/max the previous scalar aggregation computed, read from
-    row-group headers instead of a full corpus scan; at 100 TB this
-    is the catalog-statistics lookup. A source without usable footer
-    stats falls back to the one scalar min/max pass."""
+    FOOTER statistics (optimization r14, guide §6; see
+    ``metadata.column_bounds``) — the same exact min/max the scalar
+    aggregation computes, read from row-group headers instead of a
+    full corpus scan; at 100 TB this is the catalog-statistics
+    lookup."""
 
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_partkey", "l_suppkey",
         F.round("l_extendedprice", 2).alias("price"),
     )
-    stats = _parquet_int_bounds(sf_dir, "lineitem", ("l_partkey", "l_suppkey"))
-    if stats is not None:
-        (p_lo, p_hi), (s_lo, s_hi) = stats["l_partkey"], stats["l_suppkey"]
-    else:  # pragma: no cover — every driver corpus writes footer stats
-        b = li.select(
-            F.min("l_partkey").alias("p_lo"), F.max("l_partkey").alias("p_hi"),
-            F.min("l_suppkey").alias("s_lo"), F.max("l_suppkey").alias("s_hi"),
-        ).collect()[0]
-        p_lo, p_hi, s_lo, s_hi = b.p_lo, b.p_hi, b.s_lo, b.s_hi
+    bounds = column_bounds(
+        li, f"{sf_dir}/lineitem.parquet", ("l_partkey", "l_suppkey")
+    )
     bits = 8
 
-    def rank(col: str, lo: int, hi: int):
+    def rank(col: str):
+        # an empty table (or all-null column) has no bound and no value to rank
+        lo, hi = bounds[col] if bounds[col][0] is not None else (0, 0)
         span = max(hi - lo, 1)
         return F.least(
             F.lit((1 << bits) - 1),
             F.floor((F.col(col) - lo) * (1 << bits) / (span + 1)).cast("int"),
         )
 
-    px, sx = rank("l_partkey", p_lo, p_hi), rank("l_suppkey", s_lo, s_hi)
+    px, sx = rank("l_partkey"), rank("l_suppkey")
     morton = F.lit(0)
     for i in range(bits):
         bit_p = F.shiftright(px, i).bitwiseAND(F.lit(1))

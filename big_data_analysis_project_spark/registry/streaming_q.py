@@ -26,6 +26,7 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..metadata import column_bounds, row_count, table_bytes, table_files
 from ..session import env_int
 from ..sources.readers import (
     events_raw_ts_type,
@@ -75,19 +76,10 @@ def _stream_partitions(
     cores = spark.sparkContext.defaultParallelism
     if kernel_parallel:
         return max(2, min(cores, 16))
-    from pathlib import Path
-
-    nbytes = 0
     try:
-        p = Path(sf_dir) / f"{table}.parquet"
-        if p.is_dir():
-            nbytes = sum(
-                f.stat().st_size for f in p.rglob("*.parquet") if f.is_file()
-            )
-        elif p.exists():
-            nbytes = p.stat().st_size
+        nbytes = table_bytes(f"{sf_dir}/{table}.parquet")
     except OSError:
-        pass  # unreadable source: fall through to the floor
+        nbytes = 0  # unreadable source: fall through to the floor
     return max(2, min(cores, -(-nbytes // _STATE_PARTITION_TARGET_BYTES)))
 
 
@@ -117,107 +109,20 @@ def _stage_table_files(stage, sf_dir: str, table: str) -> None:
     symlink silently matches ZERO files (round-6 scale probe: every
     events-driven stream key returned 0 rows on a multi-file table).
     Flat part links are also the honest layout: a production arrival
-    directory receives files, not table directories."""
-    import os
+    directory receives files, not table directories. ``table_files``
+    recurses into key=value partition directories (ADVICE r6 #4; flat
+    links drop their VALUES, callers stage plain tables) and returns
+    absolute paths (a relative link target dangles, round-7 probe)."""
     from pathlib import Path
 
-    # resolve() before linking: a RELATIVE sf_dir would otherwise be
-    # stored verbatim as the link target and re-resolved against the
-    # staging dir in /tmp — every link silently broken, stream reads
-    # zero rows (round-7 probe: all stream keys 0 rows when invoked
-    # with a repo-relative data dir). Same silent-zero class as the
-    # round-6 directory-symlink bug; absolute targets kill it.
-    src = (Path(sf_dir) / f"{table}.parquet").resolve()
-    if src.is_dir():
-        # rglob, not glob: a PARTITIONED table nests part files under
-        # key=value subdirectories, where a top-level *.parquet glob
-        # matches nothing — the same silent 0-row failure class this
-        # helper exists to prevent (ADVICE r6 #4). Note flat links drop
-        # directory-encoded partition VALUES; callers stage plain
-        # tables, and the raise below makes any empty staging loud.
-        parts = sorted(p for p in src.rglob("*.parquet") if p.is_file())
-        if not parts:
-            raise ValueError(
-                f"no parquet part files found under {src} — staging "
-                "would silently stream zero rows"
-            )
-        for i, part in enumerate(parts):
-            os.symlink(part, Path(stage) / f"part-{i:05d}.parquet")
-    else:
-        os.symlink(src, Path(stage) / f"{table}.parquet")
-
-def _events_ts_bounds_us(sf_dir: str) -> tuple[int, int] | None:
-    """Exact (min, max) of ``events.ts`` in unix MICROSECONDS read from
-    the parquet FOOTER statistics — a pure-metadata pass over row-group
-    headers, no data read (optimization r14, guide §6: the same
-    table-statistics discipline ``sink_zorder``'s ``_parquet_int_bounds``
-    established). The MIN/MAX aggregation this replaces is a FULL corpus
-    scan at 100 TB, run once per call by the quartile/split staging
-    keys. INT64 timestamp statistics are exact (no truncation), so the
-    bounds equal ``unix_micros(min/max(ts))`` over the normalized frame
-    for both on-disk encodings:
-
-    * ``timestamp[us]``: the physical INT64 IS unix micros (session tz
-      pinned UTC, so the NTZ reading is value-identical);
-    * ``TIMESTAMP(NANOS)`` (read as bigint): physical nanos
-      floor-divide to micros exactly like ``normalize_events_ts``'s
-      ``ts div 1000`` (values are post-1970 — guarded below — so
-      floor == Spark's truncating ``div``).
-
-    Returns None — caller falls back to the aggregation — when any
-    row group lacks stats, the unit is unrecognized, a value is
-    pre-epoch, or the footer is unreadable. min/max statistics ignore
-    nulls, exactly as the MIN/MAX aggregation does."""
-    import json
-    from pathlib import Path
-
-    import pyarrow.parquet as pq
-
-    src = Path(sf_dir) / "events.parquet"
-    if src.is_dir():
-        files = sorted(p for p in src.rglob("*.parquet") if p.is_file())
-    elif src.exists():
-        files = [src]
-    else:
-        return None
-    if not files:
-        return None
-    lo: int | None = None
-    hi: int | None = None
-    try:
-        for f in files:
-            md = pq.ParquetFile(f).metadata
-            if not md.num_row_groups:
-                continue
-            names = {
-                md.row_group(0).column(i).path_in_schema: i
-                for i in range(md.num_columns)
-            }
-            if "ts" not in names:
-                return None
-            for rg in range(md.num_row_groups):
-                g = md.row_group(rg)
-                if g.num_rows == 0:
-                    continue
-                st = g.column(names["ts"]).statistics
-                if st is None or not st.has_min_max:
-                    return None
-                meta = json.loads(st.logical_type.to_json())
-                unit = meta.get("timeUnit")
-                a, b = int(st.min_raw), int(st.max_raw)
-                if a < 0:
-                    return None  # pre-epoch: floor vs div diverge
-                if unit == "nanoseconds":
-                    a, b = a // 1000, b // 1000
-                elif unit != "microseconds":
-                    return None
-                lo = a if lo is None else min(lo, a)
-                hi = b if hi is None else max(hi, b)
-    except Exception:  # noqa: BLE001 — stats are an optimization, never fatal
-        return None
-    if lo is None or hi is None:
-        return None
-    return lo, hi
+    src = f"{sf_dir}/{table}.parquet"
+    parts = table_files(src)
+    if not parts:
+        raise ValueError(
+            f"no parquet files under {src}: staging would stream zero rows"
+        )
+    for i, part in enumerate(parts):
+        os.symlink(part.path, Path(stage) / f"part-{i:05d}.parquet")
 
 
 def _stage_events_stream(spark: SparkSession, sf_dir: str, prefix: str) -> DataFrame:
@@ -998,7 +903,7 @@ def _backfill_preflight(spark: SparkSession, sf_dir: str) -> tuple:
     four calls of a round."""
     from datetime import datetime, timedelta
 
-    # corpus max_ts from the parquet footer when available (r14,
+    # corpus max_ts from the parquet footer when it is exact (r14,
     # guide §6): the MAX aggregation is the preflight's only FULL
     # corpus scan (the tail profile below prunes row groups via the
     # pushed ts >= split predicate). The datetime construction
@@ -1006,16 +911,12 @@ def _backfill_preflight(spark: SparkSession, sf_dir: str) -> tuple:
     # (integer seconds + microsecond replace), so the F.lit
     # round-trip is bit-identical to the collected value's.
     ev = load_events(spark, sf_dir)
-    bounds = _events_ts_bounds_us(sf_dir)
-    if bounds is not None:
-        hi_us = bounds[1]
-        m = datetime.fromtimestamp(hi_us // 1_000_000).replace(
-            microsecond=hi_us % 1_000_000
-        )
-    else:  # pragma: no cover — every driver corpus has stats
-        m = ev.agg(F.max("ts").alias("m")).collect()[0]["m"]
-    if m is None:
+    hi_us = column_bounds(ev, f"{sf_dir}/events.parquet", ("ts",))["ts"][1]
+    if hi_us is None:
         return None, None
+    m = datetime.fromtimestamp(hi_us // 1_000_000).replace(
+        microsecond=hi_us % 1_000_000
+    )
     s = m - timedelta(hours=STREAM_TAIL_HOURS)
     return s, stream_pair_profile(ev.filter(F.col("ts") >= F.lit(s)))
 
@@ -1359,7 +1260,7 @@ def incremental_hourly_runs(spark: SparkSession, sf_dir: str):
     # the raw schema. batch_rows comes from the written files' parquet
     # footers (row counts are footer metadata, exact) instead of two
     # count jobs — the same metadata-for-scan trade as
-    # _events_ts_bounds_us, and independent evidence for the
+    # metadata.column_bounds, and independent evidence for the
     # incrementality assertion (not derived from streaming progress).
     raw = spark.read.schema(raw_schema).parquet(f"{sf_dir}/events.parquet")
     split_root = root / "split"
@@ -1369,16 +1270,7 @@ def incremental_hourly_runs(spark: SparkSession, sf_dir: str):
         .parquet(str(split_root))
     )
     batches = [split_root / f"b={i}" for i in (0, 1)]
-
-    def _footer_rows(bdir: Path) -> int:
-        import pyarrow.parquet as pq
-
-        return sum(
-            pq.ParquetFile(f).metadata.num_rows
-            for f in sorted(bdir.glob("part-*.parquet"))
-        )
-
-    batch_rows = [_footer_rows(b) for b in batches]
+    batch_rows = [row_count(b) for b in batches]
 
     stream = normalize_events_ts(
         spark.readStream.schema(raw_schema).format("parquet").load(str(landing))
@@ -1494,18 +1386,11 @@ def stream_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_events(spark, sf_dir).select(
         "event_id", "ts", "user_id", "event_type"
     )
-    # quartile bounds from parquet footer statistics when available
-    # (r14, guide §6): the scalar MIN/MAX aggregation is a full corpus
-    # scan per call at 100 TB; the footer pass reads only metadata and
-    # is bit-identical (see _events_ts_bounds_us)
-    bounds = _events_ts_bounds_us(sf_dir)
-    if bounds is None:  # pragma: no cover — every driver corpus has stats
-        b = ev.select(
-            F.unix_micros(F.min("ts")).alias("lo"),
-            F.unix_micros(F.max("ts")).alias("hi"),
-        ).collect()[0]
-        bounds = (b.lo, b.hi)
-    lo, hi = bounds
+    # quartile bounds from the footer when exact (r14, guide §6): the
+    # MIN/MAX aggregation is a full corpus scan per call at 100 TB
+    lo, hi = column_bounds(ev, f"{sf_dir}/events.parquet", ("ts",))["ts"]
+    if lo is None:  # no events: every quartile is empty
+        lo = hi = 0
     n_files = 4
     span = (hi - lo) // n_files + 1
     stage = Path(tempfile.mkdtemp(prefix="bdap_stream_outer_"))
@@ -1673,16 +1558,10 @@ def stream_dedup_watermarked(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pathlib import Path
 
     ev = load_events(spark, sf_dir).select("event_id", "ts", "event_type")
-    # split bounds from footer statistics, aggregation fallback — same
+    # split bounds from footer statistics when they are exact — same
     # metadata-for-scan trade as stream_outer_join (r14, guide §6)
-    bounds = _events_ts_bounds_us(sf_dir)
-    if bounds is None:  # pragma: no cover — every driver corpus has stats
-        b = ev.select(
-            F.unix_micros(F.min("ts")).alias("lo"),
-            F.unix_micros(F.max("ts")).alias("hi"),
-        ).collect()[0]
-        bounds = (b.lo, b.hi)
-    mid = (bounds[0] + bounds[1]) // 2
+    lo, hi = column_bounds(ev, f"{sf_dir}/events.parquet", ("ts",))["ts"]
+    mid = 0 if lo is None else (lo + hi) // 2  # no events: both batches empty
     two_h = 2 * 3600 * 1_000_000
     b1 = ev.filter(F.unix_micros("ts") <= mid)
     redelivered = b1.filter(F.unix_micros("ts") > mid - two_h)

@@ -18,6 +18,7 @@ the initial value.
 
 from __future__ import annotations
 
+import functools
 import os
 import sys
 
@@ -46,6 +47,27 @@ def env_int(name: str, default):
 
 def _default_parallelism() -> int:
     return max(1, env_int("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
+
+
+_SHIPPED: set[str] = set()  # application ids given the package zip
+
+
+@functools.cache
+def _package_zip() -> str:
+    """This package as a bytecode zip, built once per process under the
+    temp dir, for ``addPyFile``: Python workers import from their launch
+    directory and the JVM's ``PYTHONPATH``, not the driver's sys.path."""
+    import atexit
+    import shutil
+    import tempfile
+    import zipfile
+
+    d = tempfile.mkdtemp(prefix="bdap_pyfiles_")
+    atexit.register(shutil.rmtree, d, ignore_errors=True)
+    path = os.path.join(d, f"{__package__}.zip")
+    with zipfile.PyZipFile(path, "w") as zf:
+        zf.writepy(os.path.dirname(os.path.abspath(__file__)))
+    return path
 
 
 def get_spark(
@@ -98,7 +120,11 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    sc = spark.sparkContext
+    sc.setLogLevel("WARN")
+    if sc.applicationId not in _SHIPPED:
+        sc.addPyFile(_package_zip())
+        _SHIPPED.add(sc.applicationId)
     return spark
 
 

@@ -70,20 +70,17 @@ def compact_parquet(
     here the shuffle IS the point — uniform target files."""
     from pathlib import Path as _P
 
+    from .metadata import table_files
+
     if _P(src).resolve() == _P(dst).resolve():
         raise ValueError(
             "compact_parquet: src and dst must differ — overwriting the "
             "directory being read fails mid-write"
         )
-    # recursive: a partitionBy layout nests part files under key=value
-    # subdirectories, which a flat glob would miss entirely (total=0
-    # would then funnel everything into ONE file)
-    before = [p for p in _P(src).rglob("*.parquet")]
-    total = sum(p.stat().st_size for p in before)
-    n_out = max(1, -(-total // target_file_bytes))
+    before = table_files(src)  # recursive, so partitionBy layouts count
+    n_out = max(1, -(-sum(f.size for f in before) // target_file_bytes))
     spark.read.parquet(src).repartition(n_out).write.mode("overwrite").parquet(dst)
-    after = [p for p in _P(dst).rglob("*.parquet")]
-    return len(before), len(after)
+    return len(before), len(table_files(dst))
 
 
 def write_csv(

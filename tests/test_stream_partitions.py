@@ -218,35 +218,78 @@ def test_every_integer_knob_is_covered():
     assert names == set(_KNOBS)
 
 
-# --- r14: events ts bounds from parquet footer statistics -------------
+# --- events ts bounds: metadata.column_bounds --------------------------
 #
 # stream_outer_join / stream_dedup_watermarked derive their staging
 # split points from min/max(ts); the footer read replaces a full
 # corpus scan (guide §6) and must be bit-identical to the aggregation
-# for BOTH on-disk ts encodings, else the staged micro-batches — and
-# with them the emitted row sets — would silently change.
+# for BOTH on-disk ts encodings and in every session time zone, else
+# the staged micro-batches — and with them the emitted row sets —
+# would silently change.
 
 
-def test_ts_bounds_footer_equals_aggregation(spark):
+def _agg_ts_bounds(ev):
     from pyspark.sql import functions as F
 
-    from big_data_analysis_project_spark.registry.streaming_q import (
-        _events_ts_bounds_us,
-    )
+    b = ev.select(
+        F.unix_micros(F.min("ts")).alias("lo"),
+        F.unix_micros(F.max("ts")).alias("hi"),
+    ).collect()[0]
+    return b.lo, b.hi
+
+
+@pytest.mark.parametrize("tz", ["UTC", "America/New_York"])
+def test_ts_bounds_footer_equals_aggregation(spark, tz, capsys):
+    """The sf corpora store ts as Timestamp(isAdjustedToUTC=false,
+    micros), which Spark reads as TIMESTAMP_NTZ and normalizes in the
+    session zone: outside UTC the footer's raw micros are hours off
+    the aggregation, so the bounds must come from the aggregation and
+    say so on stderr."""
+    from big_data_analysis_project_spark.metadata import column_bounds
     from big_data_analysis_project_spark.sources.readers import load_events
 
     from .conftest import SF_SMOKE
 
-    got = _events_ts_bounds_us(SF_SMOKE)
-    b = (
-        load_events(spark, SF_SMOKE)
-        .select(
-            F.unix_micros(F.min("ts")).alias("lo"),
-            F.unix_micros(F.max("ts")).alias("hi"),
-        )
-        .collect()[0]
-    )
-    assert got == (b.lo, b.hi)
+    prev = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", tz)
+    try:
+        ev = load_events(spark, SF_SMOKE)
+        capsys.readouterr()
+        got = column_bounds(ev, f"{SF_SMOKE}/events.parquet", ("ts",))["ts"]
+        err = capsys.readouterr().err
+        want = _agg_ts_bounds(ev)
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", prev)
+    assert got == want
+    line = f"[stats] events.ts: aggregate (session tz {tz}; footer not UTC-adjusted)"
+    assert (line in err) == (tz != "UTC"), err
+
+
+def test_ts_bounds_footer_runs_no_job(spark):
+    """In the UTC session the bounds come from the footer alone: zero
+    Spark jobs under the job group, where the aggregation runs one."""
+    from pyspark.sql import functions as F
+
+    from big_data_analysis_project_spark.metadata import column_bounds
+    from big_data_analysis_project_spark.sources.readers import load_events
+
+    from .conftest import SF_SMOKE
+
+    assert spark.conf.get("spark.sql.session.timeZone") == "UTC"
+    ev = load_events(spark, SF_SMOKE)
+    sc, group = spark.sparkContext, "column_bounds_footer"
+    jobs = lambda: len(sc.statusTracker().getJobIdsForGroup(group))  # noqa: E731
+    sc.setJobGroup(group, "footer bounds")
+    try:
+        before = jobs()
+        column_bounds(ev, f"{SF_SMOKE}/events.parquet", ("ts",))
+        footer_jobs = jobs() - before
+        ev.select(F.max("ts")).collect()
+        agg_jobs = jobs() - before - footer_jobs
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert footer_jobs == 0
+    assert agg_jobs >= 1  # the counter sees a job when one runs
 
 
 def test_ts_bounds_nanos_encoding_floors_to_micros(spark, tmp_path):
@@ -255,11 +298,8 @@ def test_ts_bounds_nanos_encoding_floors_to_micros(spark, tmp_path):
     must floor-divide the same way."""
     import pyarrow as pa
     import pyarrow.parquet as pq
-    from pyspark.sql import functions as F
 
-    from big_data_analysis_project_spark.registry.streaming_q import (
-        _events_ts_bounds_us,
-    )
+    from big_data_analysis_project_spark.metadata import column_bounds
     from big_data_analysis_project_spark.sources.readers import load_events
 
     ns = [1_704_067_200_123_456_789, 1_704_067_200_123_457_999, 1_706_000_000_000_000_001]
@@ -274,37 +314,31 @@ def test_ts_bounds_nanos_encoding_floors_to_micros(spark, tmp_path):
         }
     )
     pq.write_table(tbl, tmp_path / "events.parquet")
-    got = _events_ts_bounds_us(str(tmp_path))
+    ev = load_events(spark, str(tmp_path))
+    got = column_bounds(ev, str(tmp_path / "events.parquet"), ("ts",))["ts"]
     assert got == (min(ns) // 1000, max(ns) // 1000)
-    b = (
-        load_events(spark, str(tmp_path))
-        .select(
-            F.unix_micros(F.min("ts")).alias("lo"),
-            F.unix_micros(F.max("ts")).alias("hi"),
-        )
-        .collect()[0]
-    )
-    assert got == (b.lo, b.hi)
+    assert got == _agg_ts_bounds(ev)
 
 
-def test_ts_bounds_fallback_paths(tmp_path):
-    """No stats / no file / non-timestamp unit all return None so the
-    caller's aggregation fallback fires instead of a wrong bound."""
+def test_ts_bounds_fallback_paths(spark, tmp_path, capsys):
+    """A footer without statistics cannot answer: the bounds come from
+    the aggregation, equal to it, with the reason on stderr."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from big_data_analysis_project_spark.registry.streaming_q import (
-        _events_ts_bounds_us,
-    )
+    from big_data_analysis_project_spark.metadata import column_bounds
+    from big_data_analysis_project_spark.sources.readers import load_events
 
-    # missing table
-    assert _events_ts_bounds_us(str(tmp_path)) is None
-    # statistics disabled at write time
-    tbl = pa.table({"ts": pa.array([1, 2, 3], pa.timestamp("us"))})
+    us = [1_704_067_200_000_001, 1_704_067_300_000_002, 1_704_067_400_000_003]
+    tbl = pa.table({"ts": pa.array(us, pa.timestamp("us"))})
     pq.write_table(
         tbl, tmp_path / "events.parquet", write_statistics=False
     )
-    assert _events_ts_bounds_us(str(tmp_path)) is None
+    ev = load_events(spark, str(tmp_path))
+    capsys.readouterr()
+    got = column_bounds(ev, str(tmp_path / "events.parquet"), ("ts",))["ts"]
+    assert "[stats] events.ts: aggregate (no stats)" in capsys.readouterr().err
+    assert got == _agg_ts_bounds(ev) == (min(us), max(us))
 
 
 def test_ts_bounds_match_pyspark_datetime_roundtrip(spark):
@@ -315,18 +349,15 @@ def test_ts_bounds_match_pyspark_datetime_roundtrip(spark):
 
     from pyspark.sql import functions as F
 
-    from big_data_analysis_project_spark.registry.streaming_q import (
-        _events_ts_bounds_us,
-    )
+    from big_data_analysis_project_spark.metadata import column_bounds
     from big_data_analysis_project_spark.sources.readers import load_events
 
     from .conftest import SF_SMOKE
 
-    hi_us = _events_ts_bounds_us(SF_SMOKE)[1]
+    ev = load_events(spark, SF_SMOKE)
+    hi_us = column_bounds(ev, f"{SF_SMOKE}/events.parquet", ("ts",))["ts"][1]
     m_footer = datetime.fromtimestamp(hi_us // 1_000_000).replace(
         microsecond=hi_us % 1_000_000
     )
-    m_collected = (
-        load_events(spark, SF_SMOKE).agg(F.max("ts").alias("m")).collect()[0]["m"]
-    )
+    m_collected = ev.agg(F.max("ts").alias("m")).collect()[0]["m"]
     assert m_footer == m_collected
